@@ -1,0 +1,10 @@
+package org.apache.spark.perfbenchbridge
+
+import org.apache.spark.SparkContext
+
+/** Access to the listener bus, which Spark keeps package-private: the
+  * traced run waits for every queued event before it reads its counters.
+  */
+object Bus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
